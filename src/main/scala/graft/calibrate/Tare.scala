@@ -2,179 +2,153 @@ package graft.calibrate
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.regression.LinearRegression
-import org.apache.spark.ml.functions.array_to_vector
 import graft.kmer.Kmers
 
-/** Bias calibration — Spark-SQL/spark.ml re-expression of the reference's
-  * Tare (rice-core .../algorithms/Tare.scala).
+/** Bias calibration — Spark-SQL re-expression of the reference's Tare
+  * (rice-core .../algorithms/Tare.scala).
   *
-  * Two corrections:
+  * Two corrections, each a driver-side solve over one bounded aggregate:
   *  - k-mer GC/sequence-context bias: regress log(count) on the 16-dim
   *    dinucleotide-context histogram, keep the residual (Tare.scala:110-136).
-  *  - transcript length bias: driver-side OLS of log(µ̂) on log(len) over a
-  *    collected sample — deliberately NOT distributed; the reference found
-  *    MLlib SGD does not converge for 1-D features (Tare.scala:156-177 and
-  *    the comment at :164-167), and the sample is tiny.
+  *    One normal-equation fit, also run by q26 and mirrored term for term
+  *    in DuckDB by [[exactSolveSql]].
+  *  - transcript length bias: driver-side OLS of log(µ̂) on log(len) over
+  *    the collected (transcript-sized) pairs — deliberately NOT distributed;
+  *    the reference found MLlib SGD does not converge for 1-D features
+  *    (Tare.scala:156-177 and the comment at :164-167).
   */
 object Tare {
 
+  private val d = Kmers.dinucs.length
+
   /** Recalibrate k-mer counts for sequence-context bias
-    * (Tare.scala:110-136).
-    *
-    * calibrated = exp(sampleMeanLog + (log(count) − model(features))) as Long
-    * where sampleMeanLog = log(Σ count / #kmers) — the reference computes it
-    * with two accumulators (Tare.scala:112-117); here it is one two-aggregate
-    * pass (SURVEY A10). The SGD regressor becomes spark.ml LinearRegression
-    * (normal-equation/LBFGS solver — SGD was removed in Spark 2 and converged
-    * poorly anyway).
+    * (Tare.scala:110-136): [[calibratedCounts]] truncated to Long, as the
+    * reference's `.toLong`.
     *
     * @param kmers DataFrame(kmer, count)
-    * @return DataFrame(kmer, count) with calibrated counts
+    * @return DataFrame(kmer, count long) with calibrated counts
     */
-  def calibrateKmers(kmers: DataFrame): DataFrame = {
-    val featurized = kmers
-      .withColumn("label", log(col("count").cast("double")))
-      .withColumn("features", array_to_vector(Kmers.dinucFeatures(col("kmer"))))
-      .cache()
+  def calibrateKmers(kmers: DataFrame): DataFrame =
+    calibratedCounts(kmers).select(col("kmer"), col("cal").cast("long").as("count"))
 
-    val Seq(nKmers, totalMult) =
-      featurized.agg(count(lit(1)), sum("count")).head().toSeq.map(_.toString.toDouble)
-    val mean = math.log(totalMult / nKmers)
-
-    val model = new LinearRegression().setFitIntercept(true).fit(featurized)
-
-    val predicted = model.transform(featurized) // adds "prediction"
-    val out = predicted
-      .select(col("kmer"),
-        exp(lit(mean) + (col("label") - col("prediction"))).cast("long").as("count"))
-    featurized.unpersist()
-    out
-  }
-
-  /** Oracle-expressible variant of [[calibrateKmers]]: the same
-    * OLS-residual recalibration (reference Tare.scala:110-136), but the
-    * fit is an EXPLICIT normal-equation solve instead of spark.ml — the
-    * 16×16 Gram matrix of raw integer dinucleotide counts is one
-    * aggregation pass (exact BIGINT entries; Xᵀy rounded to 6 dp so both
-    * engines solve from matching inputs), then a driver-side
-    * no-pivot symmetric Gaussian elimination whose operation tree is
-    * mirrored term-for-term by [[exactSolveSql]], so a DuckDB oracle can
-    * hash-match the result.
+  /** The calibrated k-mer count before truncation:
     *
-    * Fit equivalence with calibrateKmers: every k-mer has exactly k−1
-    * valid dinucleotide contexts here (DNA-alphabet input), so
-    * Σ_b count_b = k−1 — the constant vector lies in the span of the raw
-    * count columns, which means the no-intercept fit on integer counts
-    * produces the SAME predictions as spark.ml's fitIntercept=true fit on
-    * the normalized histogram (same column space), without the exact
-    * collinearity an explicit intercept column would introduce. Output is
-    * the calibrated abundance rounded to 6 dp (a double, not the long
-    * cast — floor sits on an integer lattice, which cross-engine ulp
-    * noise could straddle; TareSuite pins the two variants against each
-    * other).
+    *   cal = exp(mean + log(count) − w·h),  mean = log(Σ count / #kmers)
     *
-    * @param kmers DataFrame(kmer, count), DNA-alphabet kmers of length k
+    * where h = c/n is the k-mer's dinucleotide histogram (c the integer
+    * count of each valid context, n = Σc, [[Kmers.dinucCounts]]) and w the
+    * least-squares fit of log(count) on h (Tare.scala:88-136). Σh = 1 on
+    * every row, so the reference's intercept already lies in the column
+    * space and the fit has none.
+    *
+    * The fit is one aggregation pass grouped by n (a pure-ACGT table is a
+    * single group): per group, the exact BIGINT sums G = Σ c·cᵀ and
+    * B = Σ c·⌊ln(count)·1e6⌋ (ln quantized per row, so the sums are
+    * addition-order independent), then on the driver, in ascending n,
+    * Gram = Σ G/n² and Xᵀy = Σ B/(1e6·n), and a no-pivot elimination. A
+    * context absent from every k-mer has an all-zero row and column: its
+    * elimination step is skipped and its weight is 0. A k-mer with no
+    * valid context fails the pass with the featurizer's named error.
+    *
+    * @param kmers DataFrame(kmer, count)
+    * @return DataFrame(kmer, cal double)
     */
-  def calibrateKmersExact(kmers: DataFrame, k: Int): DataFrame = {
-    val d = 16
-    val feat = kmers.select(
-      (col("kmer") :: col("count") ::
-        dinucs.zipWithIndex.map { case (dn, b) =>
-          (1 until k).map(p =>
-            when(col("kmer").substr(p, 2) === dn, 1).otherwise(0))
-            .reduce(_ + _).as(s"c$b")
-        }.toList): _*)
-      .cache()
+  def calibratedCounts(kmers: DataFrame): DataFrame = {
+    val c = (0 until d).map(i => col(s"c$i"))
+    val feat = kmers
+      .select(col("kmer") +: col("count") +: Kmers.dinucCounts(col("kmer")).zipWithIndex
+        .map { case (x, i) => x.as(s"c$i") }: _*)
+      .withColumn("n", Kmers.validContexts(col("kmer"), c))
 
-    val gramExprs =
-      (for { i <- 0 until d; j <- i until d }
-        yield sum(col(s"c$i") * col(s"c$j")).as(s"a${i}_$j")) ++
-      (0 until d).map(i =>
-        // Xᵀy as exact integers: ln(count) quantized per row to a ×1e6
-        // BIGINT (floor — unambiguous across engines), so the sum is
-        // addition-order independent and the cross-engine value identical
-        // by construction, not by a transcendental-boundary argument.
-        (sum(col(s"c$i") * floor(log(col("count").cast("double")) * 1e6))
-          .cast("double") / 1e6).as(s"b$i")) ++
-      Seq(sum(col("count")).as("total"), count(lit(1)).as("n"))
-    val row = feat.agg(gramExprs.head, gramExprs.tail: _*).head()
+    val logq = floor(log(col("count").cast("double")) * 1e6)
+    val sums = (for (i <- 0 until d; j <- i until d) yield sum(c(i) * c(j))) ++
+      c.map(ci => sum(ci * logq)) ++ Seq(sum(col("count")), count(lit(1)))
+    // bounded collect: one row per distinct n, at most k − 1 rows
+    val groups = feat.groupBy("n").agg(sums.head, sums.tail: _*)
+      .collect().sortBy(_.getInt(0))
 
     val a = Array.ofDim[Double](d, d) // upper triangle (j >= i) only
-    var idx = 0
-    for (i <- 0 until d; j <- i until d) { a(i)(j) = row.getLong(idx).toDouble; idx += 1 }
-    val bv = Array.tabulate(d)(i => row.getDouble(idx + i))
-    val total = row.getLong(idx + d)
-    val n = row.getLong(idx + d + 1)
+    val bv = new Array[Double](d)
+    var total, rows = 0L
+    for (g <- groups) {
+      val n = g.getInt(0).toDouble
+      var idx = 1
+      for (i <- 0 until d; j <- i until d) { a(i)(j) += g.getLong(idx) / (n * n); idx += 1 }
+      for (i <- 0 until d) bv(i) += g.getLong(idx + i) / (1e6 * n)
+      total += g.getLong(idx + d)
+      rows += g.getLong(idx + d + 1)
+    }
 
-    // forward elimination without pivoting (the Gram of a full-column-rank
-    // design is SPD, so every pivot is positive); each update is written as
-    // x - (p / q) * y, the exact shape exactSolveSql emits
-    for (kk <- 0 until d - 1; i <- kk + 1 until d) {
+    // forward elimination without pivoting (the Gram of the present
+    // contexts is SPD, so every such pivot is positive); each update is
+    // written as x - (p / q) * y, the exact shape exactSolveSql emits
+    for (kk <- 0 until d - 1 if a(kk)(kk) != 0; i <- kk + 1 until d) {
       for (j <- i until d)
         a(i)(j) = a(i)(j) - (a(kk)(i) / a(kk)(kk)) * a(kk)(j)
       bv(i) = bv(i) - (a(kk)(i) / a(kk)(kk)) * bv(kk)
     }
     // back substitution, subtracted terms in ascending-j order
     val w = new Array[Double](d)
-    for (i <- d - 1 to 0 by -1) {
+    for (i <- d - 1 to 0 by -1 if a(i)(i) != 0) {
       var s = bv(i)
       for (j <- i + 1 until d) s = s - a(i)(j) * w(j)
       w(i) = s / a(i)(i)
     }
 
-    val mean = math.log(total.toDouble / n)
-    val pred = (0 until d).map(i => lit(w(i)) * col(s"c$i")).reduce(_ + _)
-    val out = feat.select(col("kmer"),
-      round(exp(lit(mean) + log(col("count").cast("double")) - pred), 6)
-        .as("cal_count"))
-    feat.unpersist()
-    out
+    val mean = math.log(total.toDouble / rows)
+    val pred = c.indices.map(i => lit(w(i)) * c(i)).reduce(_ + _) / col("n")
+    feat.select(col("kmer"),
+      exp(lit(mean) + log(col("count").cast("double")) - pred).as("cal"))
   }
 
-  /** ACGT-ordered dinucleotides — index b = 4·idx(first) + idx(second),
-    * the same ordering Kmers.dinucFeatures bins into. */
-  val dinucs: Seq[String] = for (x <- "ACGT"; y <- "ACGT") yield s"$x$y"
-
-  /** The DuckDB mirror of [[calibrateKmersExact]]'s solve: CTEs from a
-    * relation `f(kmer, cnt, c0..c15)` to the final calibrated SELECT.
-    * Every elimination/back-substitution term is generated with the same
-    * association order as the Scala loops, so the double arithmetic is
-    * bit-identical given identical inputs: exact integer Gram, and Xᵀy
-    * summed as exact ×1e6-scaled BIGINTs (per-row floor-quantized ln —
-    * addition-order independent, so no FP-boundary caveat survives). */
-  def exactSolveSql(d: Int = 16): String = {
-    val gram =
+  /** The DuckDB mirror of [[calibratedCounts]]: CTEs from a relation
+    * `f(kmer, cnt, c0..c15)` (integer context counts) to the final SELECT
+    * of the calibrated count rounded to 6 dp. Groups fold in ascending n
+    * (`list_reduce` over an ordered `list`), and every elimination and
+    * back-substitution term has the association order of the Scala loops,
+    * a zero pivot included, so the double arithmetic is bit-identical
+    * given identical inputs. */
+  def exactSolveSql(): String = {
+    def a(i: Int, j: Int) = s"a${i}_$j"
+    val perGroup =
       (for { i <- 0 until d; j <- i until d }
-        yield s"CAST(sum(c$i*c$j) AS DOUBLE) AS a${i}_$j") ++
+        yield s"CAST(sum(c$i*c$j) AS DOUBLE) / (n*n) AS ${a(i, j)}") ++
       (0 until d).map(i =>
-        s"sum(c$i * CAST(floor(ln(cnt) * 1e6) AS BIGINT)) / 1e6 AS b$i") ++
-      Seq("CAST(sum(cnt) AS BIGINT) AS total", "count(*) AS n")
-    val g = s"g AS (SELECT\n    ${gram.mkString(",\n    ")}\n  FROM f)"
+        s"CAST(sum(c$i * CAST(floor(ln(cnt) * 1e6) AS BIGINT)) AS DOUBLE) / (1e6 * n) AS b$i") ++
+      Seq("sum(cnt) AS total", "count(*) AS nk")
+    val fold = ((for { i <- 0 until d; j <- i until d } yield a(i, j)) ++
+      (0 until d).map(i => s"b$i"))
+      .map(x => s"list_reduce(list($x ORDER BY n), (x, y) -> x + y) AS $x") ++
+      Seq("CAST(sum(total) AS BIGINT) AS total", "CAST(sum(nk) AS BIGINT) AS nk")
+    val fn = s"fn AS (SELECT *, ${(0 until d).map(i => s"c$i").mkString(" + ")} AS n FROM f)"
+    val gs = s"gs AS (SELECT n,\n    ${perGroup.mkString(",\n    ")}\n  FROM fn GROUP BY n)"
+    val g = s"g AS (SELECT\n    ${fold.mkString(",\n    ")}\n  FROM gs)"
     val steps = (0 until d - 1).map { kk =>
       val src = if (kk == 0) "g" else s"e${kk - 1}"
+      def upd(x: String, y: String, i: Int) =
+        s"CASE WHEN ${a(kk, kk)} = 0 THEN $x ELSE $x - (${a(kk, i)} / ${a(kk, kk)}) * $y END"
       val cols = scala.collection.mutable.Buffer[String]()
-      for (p <- 0 to kk; q <- p until d) cols += s"a${p}_$q"
+      for (p <- 0 to kk; q <- p until d) cols += a(p, q)
       for (p <- 0 to kk) cols += s"b$p"
       for (i <- kk + 1 until d) {
-        for (j <- i until d)
-          cols += s"a${i}_$j - (a${kk}_$i / a${kk}_$kk) * a${kk}_$j AS a${i}_$j"
-        cols += s"b$i - (a${kk}_$i / a${kk}_$kk) * b$kk AS b$i"
+        for (j <- i until d) cols += s"${upd(a(i, j), a(kk, j), i)} AS ${a(i, j)}"
+        cols += s"${upd(s"b$i", s"b$kk", i)} AS b$i"
       }
-      cols += "total"; cols += "n"
+      cols += "total"; cols += "nk"
       s"e$kk AS (SELECT ${cols.mkString(", ")} FROM $src)"
     }
     val ws = (d - 1 to 0 by -1).map { i =>
       val src = if (i == d - 1) s"e${d - 2}" else s"w${i + 1}"
-      val terms = (i + 1 until d).map(j => s" - a${i}_$j * w$j").mkString
-      s"w$i AS (SELECT *, (b$i$terms) / a${i}_$i AS w$i FROM $src)"
+      val terms = (i + 1 until d).map(j => s" - ${a(i, j)} * w$j").mkString
+      s"w$i AS (SELECT *, CASE WHEN ${a(i, i)} = 0 THEN 0 " +
+        s"ELSE (b$i$terms) / ${a(i, i)} END AS w$i FROM $src)"
     }
     val predTerms = (0 until d).map(i => s"m.w$i*f.c$i").mkString(" + ")
-    (Seq(g) ++ steps ++ ws).mkString(",\n") + s"""
+    (Seq(fn, gs, g) ++ steps ++ ws).mkString(",\n") + s"""
       |SELECT f.kmer,
-      |  round(exp(ln(m.total * 1.0 / m.n) + ln(f.cnt) - ($predTerms)), 6)
+      |  round(exp(ln(m.total * 1.0 / m.nk) + ln(f.cnt) - ($predTerms) / f.n), 6)
       |    AS cal_count
-      |FROM f, w0 m ORDER BY f.kmer""".stripMargin
+      |FROM fn f, w0 m ORDER BY f.kmer""".stripMargin
   }
 
   /** Recalibrate transcript abundances for length bias
@@ -190,12 +164,10 @@ object Tare {
     * @param tLen  DataFrame(tid, len)
     * @return DataFrame(tid, muHat) calibrated
     */
-  def calibrateTxLenBias(muHat: DataFrame, tLen: DataFrame,
-      samplingRate: Double = 1.0): DataFrame = {
-    // driver-side OLS on the (small, possibly sampled) (log µ̂, log len) pairs
+  def calibrateTxLenBias(muHat: DataFrame, tLen: DataFrame): DataFrame = {
+    // driver-side OLS on the (transcript-sized) (log µ̂, log len) pairs
     val local = muHat.join(broadcast(tLen), "tid")
       .select(col("muHat"), col("len").cast("double"))
-      .sample(withReplacement = false, samplingRate)
       .collect()
       .map(r => (math.log(r.getDouble(0)), math.log(r.getDouble(1))))
 

@@ -95,15 +95,20 @@ object Main {
     val genome = Timers.time("loadGenome") { graft.io.Genome.read(genomePath) }
     val bc = spark.sparkContext.broadcast(genome)
     val transcripts = graft.io.Gtf.transcripts(spark, gtfPath)
-    val extract = udf { (exons: Seq[org.apache.spark.sql.Row]) =>
+    val extract = udf { (id: String, exons: Seq[org.apache.spark.sql.Row]) =>
       // transcript hull on its reference sequence (Index.scala:85 uses t.region)
       val regions = exons.map(_.getStruct(3))
       val name = regions.head.getString(0)
       val start = regions.map(_.getLong(1)).min
       val end = regions.map(_.getLong(2)).max
-      bc.value(name).substring(start.toInt, end.toInt)
-    }
-    val seqs = transcripts.select(col("id"), extract(col("exons")).as("sequence"))
+      val hull = s"transcript $id: exon hull $name:[$start, $end)"
+      val contig = bc.value.getOrElse(name,
+        throw new IllegalArgumentException(s"$hull is on contig $name, which is not in the genome"))
+      require(start >= 0 && end <= contig.length,
+        s"$hull lies outside contig $name of length ${contig.length}")
+      contig.substring(start.toInt, end.toInt)
+    }.withName("transcript_hull")
+    val seqs = transcripts.select(col("id"), extract(col("id"), col("exons")).as("sequence"))
     val idx = Timers.time("buildIndex") { Indexer(seqs, k) }
     Timers.time("writeIndex") {
       val (km, cl) =

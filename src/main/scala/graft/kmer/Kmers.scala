@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** k-merization and dinucleotide featurization as pure Catalyst column
   * expressions — no Scala UDFs, so everything stays inside whole-stage
-  * codegen and the optimizer can prune/push around them.
+  * codegen and the optimizer can prune/push around them. The featurizer
+  * is the one regressor of Tare's k-mer calibration.
   *
   * Reference semantics: `sequence.sliding(k)` (Index.scala:87-89, SURVEY F1)
   * and the 16-bin dinucleotide histogram (Tare.scala:38-101, SURVEY F3).
@@ -19,7 +20,7 @@ object Kmers {
     */
   def kmers(seq: Column, k: Int): Column = {
     val positions = sequence(lit(1), length(seq) - (k - 1))
-    when(length(seq) >= k, transform(positions, i => substring(seq, i, lit(k))))
+    when(length(seq) >= k, transform(positions, i => seq.substr(i, lit(k))))
       .otherwise(array().cast("array<string>"))
   }
 
@@ -29,40 +30,39 @@ object Kmers {
   def kmerExplode(seq: Column, k: Int): Column =
     KmerGenerator.kmer_explode(seq, k)
 
-  /** substring that accepts a Column start position (functions.substring
-    * only takes Int literals). 1-based, like SQL. */
-  private def substring(str: Column, pos: Column, len: Column): Column =
-    str.substr(pos, len)
+  /** The 16 ACGT dinucleotide contexts in histogram-bin order:
+    * bin b = 4·idx(first) + idx(second), idx in ACGT order
+    * (Tare.scala:38-43). */
+  val dinucs: Seq[String] = for (x <- "ACGT"; y <- "ACGT") yield s"$x$y"
 
-  /** Base → index in ACGT order; -1 for anything else.
-    * Reference: Tare.scala:38-43 (case-insensitive). */
-  def baseIdx(c: Column): Column = {
-    val u = upper(c)
-    when(u === "A", 0).when(u === "C", 1).when(u === "G", 2).when(u === "T", 3)
-      .otherwise(-1)
+  /** Integer count of each dinucleotide context of a k-mer, one column
+    * per bin of [[dinucs]] — the contexts of `kmer.sliding(2)`
+    * (Tare.scala:88-90). Each bin is a case-insensitive zero-width
+    * lookahead `regexp_count`, so overlapping contexts all count (AAA
+    * holds two AA), the expression is independent of k, and it stays in
+    * whole-stage codegen. A context with a base outside ACGT matches no
+    * bin: that is the reference's drop of invalid contexts
+    * (isValidContext, Tare.scala:73-77 and :90).
+    */
+  def dinucCounts(kmer: Column): Seq[Column] =
+    dinucs.map(dn => regexp_count(kmer, lit(s"(?i)(?=$dn)")))
+
+  /** Number of valid contexts n = Σ `counts` of a k-mer. Zero valid
+    * contexts is an error (assert at Tare.scala:91), surfaced via
+    * `raise_error` to keep the same fail-fast contract. */
+  def validContexts(kmer: Column, counts: Seq[Column]): Column = {
+    val n = counts.reduce(_ + _)
+    when(n > 0, n).otherwise(
+      raise_error(concat(lit("no valid dinucleotide context in k-mer: "), kmer))
+        .cast("int"))
   }
 
-  /** 16-dim dinucleotide-context histogram of a k-mer, normalized by the
-    * number of valid (ACGT-only) contexts. Mirrors Tare.scala:88-101:
-    * contexts = kmer.sliding(2); invalid contexts are dropped (Tare.scala:90);
-    * zero valid contexts is an error (assert at Tare.scala:91) — here surfaced
-    * via `raise_error` to keep the same fail-fast contract.
-    */
+  /** 16-dim dinucleotide-context histogram h = c/n of a k-mer: the
+    * [[dinucCounts]] normalized by the number of valid contexts
+    * (Tare.scala:88-101). The regressor of Tare's k-mer calibration. */
   def dinucFeatures(kmer: Column): Column = {
-    val contexts = kmers(kmer, 2)
-    // validity is per base (isValidContext, Tare.scala:73-77): encoding the
-    // pair as 4·i₀+i₁ alone would let e.g. "TN" (3·4 + -1 = 11) through
-    val idxs = transform(contexts, c => {
-      val i0 = baseIdx(substring(c, lit(1), lit(1)))
-      val i1 = baseIdx(substring(c, lit(2), lit(1)))
-      when(i0 >= 0 && i1 >= 0, i0 * 4 + i1).otherwise(-1)
-    })
-    val valid = filter(idxs, i => i >= 0)
-    val n = size(valid)
-    val hist = transform(sequence(lit(0), lit(15)), b =>
-      size(filter(valid, i => i === b)).cast("double") / n.cast("double"))
-    when(n > 0, hist).otherwise(
-      raise_error(concat(lit("no valid dinucleotide context in k-mer: "), kmer))
-        .cast("array<double>"))
+    val c = dinucCounts(kmer)
+    val n = validContexts(kmer, c)
+    array(c.map(_ / n): _*)
   }
 }

@@ -204,9 +204,12 @@ object Quantify {
     }
 
     val readKmers = Timers.time("countKmers") { countKmers(reads.toDF(), kmerLength) }
+    // calibration reads the counts twice — its fit pass, then the lazy
+    // calibrated rows — so they are cached, or every read shard would be
+    // scanned twice; without calibration they are read once, uncached
     val calibrated =
       if (calibrateKmerBias) Timers.time("tareKmers") {
-        graft.calibrate.Tare.calibrateKmers(readKmers)
+        graft.calibrate.Tare.calibrateKmers(readKmers.cache())
       }
       else readKmers
 
@@ -232,6 +235,8 @@ object Quantify {
     var mu = Timers.time("initializeEM") {
       mAgg(initializeEM(ecCounts, ecToTx).join(relEc, "ec"), tLen, kmerLength)
     }
+    // the init job filled the ecCounts cache; the read counts are spent
+    readKmers.unpersist()
 
     // EM loop — driver-side iteration over a constant-depth plan: mAgg
     // localCheckpoints the per-transcript state (ONE eager job per

@@ -166,7 +166,7 @@ object GenomicsQueries {
     * dinucleotide featurization, then Tare.exactSolveSql's mirrored
     * normal-equation solve. */
   private def q26OracleSql: String = {
-    val cs = graft.calibrate.Tare.dinucs.zipWithIndex.map { case (dn, b) =>
+    val cs = graft.kmer.Kmers.dinucs.zipWithIndex.map { case (dn, b) =>
       (1 to 3).map(p => s"CASE WHEN substr(kmer, $p, 2) = '$dn' THEN 1 ELSE 0 END")
         .mkString("(", " + ", s") AS c$b")
     }
@@ -315,14 +315,12 @@ object GenomicsQueries {
     // (Tare.scala:189-192) are both in the SQL.
     // I3: the sequence-context (GC) bias regression (reference
     // Tare.scala:110-136): regress log(count) on the 16-dim
-    // dinucleotide-context features, keep the residual, rescale to the
-    // mean. Runs through Tare.calibrateKmersExact — the explicit
-    // normal-equation form of the fit (exact integer Gram + integer
-    // ×1e6-quantized Xᵀy, driver-side no-pivot elimination mirrored term-for-term by
-    // Tare.exactSolveSql) — so the FULL 16-feature OLS is hash-checked
-    // against DuckDB. TareSuite pins calibrateKmersExact against the
-    // spark.ml calibrateKmers fit (same predictions: the raw-count column
-    // space contains the intercept), and value-pins the math on
+    // dinucleotide-context histogram, keep the residual, rescale to the
+    // mean. Runs the same fit as Quantify (Tare.calibratedCounts: exact
+    // integer Gram + ×1e6-quantized Xᵀy, driver-side no-pivot elimination
+    // mirrored term for term by Tare.exactSolveSql), so the FULL
+    // 16-feature OLS is hash-checked against DuckDB. TareSuite pins the
+    // fit against a spark.ml LinearRegression and value-pins the math on
     // hand-computed fixtures.
     Q("q26_kmer_calibration",
       (s, d) => {
@@ -336,7 +334,8 @@ object GenomicsQueries {
           .select(translate(md5($"text"),
             "0123456789abcdef", "ACGTACGTACGTACGT").as("sequence"))
         val kmers = Quantify.countKmers(dna, 4)
-        graft.calibrate.Tare.calibrateKmersExact(kmers, 4)
+        graft.calibrate.Tare.calibratedCounts(kmers)
+          .select($"kmer", round($"cal", 6).as("cal_count"))
           .orderBy($"kmer")
       },
       Some(q26OracleSql)),

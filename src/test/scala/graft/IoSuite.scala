@@ -415,6 +415,26 @@ class IoSuite extends SparkSuite {
       assert(snap.contains(stage), s"missing timer for $stage")
   }
 
+  test("cli index names the transcript whose exon lies outside its contig") {
+    val fa = write("genome_bad", ">chr1\nCAATCCTTCGCCGCAGTGCA\n")
+    def failure(gtfLine: String): IllegalArgumentException = {
+      val gtf = write("ann_bad", gtfLine + "\n")
+      val out = Files.createTempDirectory("graft_cli_bad").toString
+      val e = intercept[Exception](graft.cli.Main.main(Array("index", fa, gtf, "5", s"$out/idx")))
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalArgumentException => i }
+        .getOrElse(fail(s"no IllegalArgumentException under $e"))
+    }
+    // past the end of the 20-base contig: hull [11, 30)
+    val past = failure("chr1\tt\texon\t12\t30\t.\t+\t.\tgene_id \"g1\"; transcript_id \"tx_past\";")
+    for (part <- Seq("tx_past", "chr1", "[11, 30)", "length 20"))
+      assert(past.getMessage.contains(part), past.getMessage)
+    // a contig the genome does not hold
+    val unknown = failure("chrZ\tt\texon\t1\t10\t.\t+\t.\tgene_id \"g1\"; transcript_id \"tx_unknown\";")
+    for (part <- Seq("tx_unknown", "chrZ", "[0, 10)", "not in the genome"))
+      assert(unknown.getMessage.contains(part), unknown.getMessage)
+  }
+
   test("-avro_compat index round-trips through the reference's avdl field names") {
     // the interop contract: rice.avdl:21-33 record field names on disk
     // (KmerToClass{kmer, equivalenceClass}, ClassContents{equivalenceClass,

@@ -63,29 +63,85 @@ class TareSuite extends SparkSuite {
     assert(origMin < newMin)
   }
 
-  test("calibrateKmersExact matches the spark.ml fit's predictions") {
-    // all 256 DNA 4-mers with a GC-biased count — the explicit
-    // normal-equation solve (raw integer dinuc counts, no intercept) must
-    // reproduce spark.ml LinearRegression's predictions (normalized
-    // features + intercept): the two designs span the same column space,
-    // so the OLS projections coincide. calibrateKmers floors to Long;
-    // the exact variant keeps the 6-dp double, hence the <1.01 bound.
+  /** GC-biased count of each k-mer, times seeded log-normal noise of
+    * the given spread. */
+  private def gcBiased(kmers: Seq[String], seed: Long, noise: Double = 0.3) = {
+    val rnd = new Random(seed)
+    kmers.map { s =>
+      val gc = s.count(ch => ch == 'C' || ch == 'G').toDouble / s.length
+      (s, (100.0 * exp(2.0 + (gc - 0.5) + noise * rnd.nextGaussian())).toLong.max(1L))
+    }
+  }
+
+  /** The reference implementation of the k-mer calibration, built here:
+    * the dinucleotide histogram computed in plain Scala (valid ACGT
+    * contexts of `kmer.sliding(2)`, normalized by their number), and
+    * spark.ml LinearRegression with an intercept, as the reference's
+    * Tare.scala:88-136 fits it. Returns the un-truncated calibrated count. */
+  private def mlCalibrated(fixture: Seq[(String, Long)]): Map[String, Double] = {
+    import org.apache.spark.ml.linalg.Vectors
+    import org.apache.spark.ml.regression.LinearRegression
+    def hist(kmer: String): org.apache.spark.ml.linalg.Vector = {
+      val bins = kmer.sliding(2).map(_.map("ACGT".indexOf(_)))
+        .collect { case Seq(a, b) if a >= 0 && b >= 0 => 4 * a + b }.toSeq
+      Vectors.dense(Array.tabulate(16)(b => bins.count(_ == b).toDouble / bins.size))
+    }
+    val df = fixture.map { case (k, c) => (k, log(c.toDouble), hist(k)) }
+      .toDF("kmer", "label", "features")
+    val model = new LinearRegression().setFitIntercept(true).fit(df)
+    val mean = log(fixture.map(_._2).sum.toDouble / fixture.size)
+    model.transform(df).collect().map(r =>
+      r.getString(0) -> exp(mean + r.getDouble(1) - r.getAs[Double]("prediction"))).toMap
+  }
+
+  private def assertMatchesMl(fixture: Seq[(String, Long)]): Unit = {
+    val ml = mlCalibrated(fixture)
+    val ours = Tare.calibrateKmers(fixture.toDF("kmer", "count"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(ours.size === fixture.size)
+    ours.foreach { case (k, v) =>
+      assert(math.abs(v - ml(k)) < 1.01, s"$k: calibrateKmers=$v vs spark.ml=${ml(k)}")
+    }
+  }
+
+  test("the normal-equation fit matches a spark.ml LinearRegression fit") {
+    // the one fit (no intercept on the normalized histogram: Σh = 1 puts
+    // the intercept in the column space) must reproduce the reference
+    // model's predictions. calibrateKmers floors to Long, hence <1.01.
     val bases = "ACGT"
     val kmers4 = for (a <- bases; b <- bases; c <- bases; d <- bases)
       yield s"$a$b$c$d"
-    val fixture = kmers4.map { s =>
-      val gc = s.count(ch => ch == 'C' || ch == 'G').toDouble / 4.0
-      (s, (100.0 * exp(2.0 + 1.0 * (gc - 0.5))).toLong)
-    }.toDF("kmer", "count")
-    val ml = Tare.calibrateKmers(fixture)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val exact = Tare.calibrateKmersExact(fixture, 4)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(exact.size === 256)
-    exact.foreach { case (k, v) =>
-      assert(math.abs(v - ml(k)) < 1.01,
-        s"$k: exact=$v vs ml-floored=${ml(k)}")
+    assertMatchesMl(gcBiased(kmers4, 4L, noise = 0.0))
+    // 6-mers, about 10% holding an N: their invalid contexts are dropped
+    // and the histogram is normalized by the valid ones only
+    val rnd = new Random(6L)
+    val kmers6 = Seq.fill(600)(Seq.fill(6)(bases(rnd.nextInt(4))).mkString).distinct
+      .map(s => if (rnd.nextInt(10) == 0) s.updated(rnd.nextInt(6), 'N') else s).distinct
+    assert(kmers6.count(_.contains('N')) > kmers6.size / 20)
+    assertMatchesMl(gcBiased(kmers6, 6L))
+  }
+
+  test("k-mers that miss some dinucleotide contexts calibrate to finite counts") {
+    // over {A,C} only, 12 of the 16 contexts appear in no k-mer: their
+    // weights are 0, not a singular solve
+    val kmers8 = (0 until 256).map(i =>
+      (0 until 8).map(p => if ((i >> p & 1) == 1) 'C' else 'A').mkString)
+    val fixture = gcBiased(kmers8, 8L)
+    val cal = Tare.calibratedCounts(fixture.toDF("kmer", "count"))
+      .collect().map(r => r.getString(0) -> r.get(1))
+    assert(cal.length === 256)
+    cal.foreach { case (k, v) =>
+      assert(v != null && v.asInstanceOf[Double].isFinite, s"$k: $v")
     }
+    assertMatchesMl(fixture)
+  }
+
+  test("a k-mer with no valid dinucleotide context fails the calibration by name") {
+    val fixture = Seq(("ACGT", 5L), ("NNNN", 3L), ("GGCA", 7L)).toDF("kmer", "count")
+    val e = intercept[Exception](Tare.calibrateKmers(fixture).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("valid")), e.toString)
   }
 
   test("calibrateTxLenBias for 4 hand-picked values") { // TareSuite.scala:96-118
